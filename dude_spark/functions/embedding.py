@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..detectors.simhash import pigeonhole_key_array
 from ..operators.candidates import pairs_from_buckets
+from ..session import local_frame
 
 
 def _seeded_rs(tag: str, seed: int) -> np.random.RandomState:
@@ -376,7 +377,8 @@ def ann_topk(
         )
     )
     if cent.size == 0:  # empty corpus → zero result rows, not a crash
-        return queries.sparkSession.createDataFrame(
+        return local_frame(
+            queries.sparkSession,
             [],
             queries.select(
                 F.col(id_col).alias("query_id"),
@@ -508,9 +510,7 @@ def _cosine_dup_pairs_exact(
     src = corpus.where(F.col(vec_col).isNotNull())
     rows = src.select(id_col, vec_col).collect()
     if not rows:  # empty corpus → empty pairs, not an np.stack crash
-        return corpus.sparkSession.createDataFrame(
-            [], f"a {id_type}, b {id_type}"
-        )
+        return local_frame(corpus.sparkSession, [], f"a {id_type}, b {id_type}")
     ids = np.array([r[id_col] for r in rows])
     C = _unit_rows(
         np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])

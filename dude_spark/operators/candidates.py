@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def overcap_stats(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """(bucket, bucket_size, bucket_min) for every over-cap bucket —
@@ -112,22 +114,17 @@ def pairs_from_buckets(
     overcap_rows = hot_stats.limit(_MAX_COLLECTED_OVERCAP + 1).collect()
     few_hot = len(overcap_rows) <= _MAX_COLLECTED_OVERCAP
     if few_hot:
-        overcap_out = spark.createDataFrame(
+        overcap_out = local_frame(
+            spark,
             [(r["bucket"], r["bucket_size"]) for r in overcap_rows],
-            schema=b.select(
+            b.select(
                 "bucket", F.lit(0).cast("long").alias("bucket_size")
             ).schema,
         )
         # (bucket, bucket_size, bucket_min) for the skew plan — tiny,
         # broadcast (the normal skew regime: a handful of hot keys)
         hot_df = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (r["bucket"], r["bucket_size"], r["bucket_min"])
-                    for r in overcap_rows
-                ],
-                schema=hot_stats.schema,
-            )
+            local_frame(spark, overcap_rows, hot_stats.schema)
         ) if overcap_rows else None
     else:
         # Pathological regime: >100k over-cap buckets means the cap /
@@ -329,9 +326,10 @@ def pairs_vs_known(
         )
     if overcap_rows:
         hot_reps = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(r["bucket"], r["bucket_min"]) for r in overcap_rows],
-                schema=known_hit.select("bucket", "known_id").schema,
+                known_hit.select("bucket", "known_id").schema,
             )
         )
         join_side = known_hit.join(
@@ -382,9 +380,10 @@ def cross_corpus_pairs(
     if known_rows:
         spark = new_buckets.sparkSession
         overcap = overcap.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(r["bucket"], r["bucket_size"], "known") for r in known_rows],
-                schema=overcap.schema,
+                overcap.schema,
             )
         )
     return vs_new.unionByName(vs_known).distinct(), overcap

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructField, StructType
 
+from ..session import local_frame
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect strictly-larger neighbors to
@@ -96,7 +98,7 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     )
     pdf = edges.toPandas()
     if pdf.empty:
-        return spark.createDataFrame([], schema=out_schema)
+        return local_frame(spark, [], out_schema)
     codes, uniques = pd.factorize(pd.concat([pdf["a"], pdf["b"]]), sort=False)
     m = len(pdf)
     parent = list(range(len(uniques)))
@@ -118,7 +120,7 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     nodes = pd.Series(uniques)
     rep = nodes.groupby(roots).transform("min")
     out = pd.DataFrame({"image_id": nodes, "cluster_id": rep})
-    return spark.createDataFrame(out, schema=out_schema)
+    return local_frame(spark, out, out_schema)
 
 
 # Bounded decision for the driver fast path: ≤ cap LONG-keyed edges

@@ -58,6 +58,7 @@ from .operators.components import connected_components
 from .operators.ids import decode_keys, encode_ids, encode_keys
 from .operators.report import assignments_to_report, write_csv_report
 from .operators.verify import prefilter_minhash, verify_exact, verify_jaccard
+from .session import local_frame
 from .storage import ParquetManifestStore, StageStore
 
 
@@ -418,9 +419,9 @@ def run_pipeline(
 
     # early-exit guard: abort on an empty input (runner.go:255-260)
     if images.limit(1).count() == 0:
-        empty_assign = spark.createDataFrame([], "image_id string, cluster_id string")
-        empty_rep = spark.createDataFrame(
-            [], "image_id string, caption string, dup_image_id string, "
+        empty_assign = local_frame(spark, [], "image_id string, cluster_id string")
+        empty_rep = local_frame(
+            spark, [], "image_id string, caption string, dup_image_id string, "
             "dup_caption string, cluster_id string"
         )
         return PipelineResult(empty_assign, empty_rep, None, st.stages)

@@ -14,6 +14,7 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # logical-plan node names that imply a shuffle boundary upstream; the
 # match is anchored to the node-name position of an analyzed-plan line
@@ -67,6 +68,40 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     return df.repartition(target)
 
 
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over DRIVER-HELD rows (a list of tuples/Rows, or a
+    pandas DataFrame) that plans as a JVM ``LocalRelation``.
+
+    The one way the package builds such frames.  ``createDataFrame``
+    on a tuple list — and on an EMPTY pandas frame, which falls back
+    off the Arrow path — plans as a ``LogicalRDD`` over a Python RDD,
+    so every action on it launches a Python-worker job.  Measured in
+    a traced 4-core streaming epoch, writing the few-row over-cap
+    record took 357–383 ms wall and ~1 s of task time that way, and
+    74–110 ms wall on one 17–19 ms task as a ``LocalRelation``.  An
+    Arrow table — empty or not — is shipped to the JVM once and
+    planned locally, and an empty one lets the optimizer fold joins
+    and unions over it away."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(
+            rows, schema=arrow_schema, preserve_index=False
+        )
+    else:
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+        )
+    return spark.createDataFrame(table, schema)
+
+
 def get_spark(
     app_name: str = "dude_spark",
     master: str | None = None,
@@ -85,9 +120,9 @@ def get_spark(
     a bare ``python`` invocation falls back to ``local[N]``.
 
     Local-mode-only tuning (tmpfs shuffle dir, 24g driver heap,
-    shuffle partitions = parallelism) is applied only when a local
-    master was resolved here — a cluster submission keeps its own
-    ``--conf`` values.
+    shuffle partitions = parallelism, zstd shuffle codec, driver-side
+    file listing) is applied only when a local master was resolved
+    here — a cluster submission keeps its own ``--conf`` values.
     """
     under_spark_submit = master is None and "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:
@@ -173,6 +208,22 @@ def get_spark(
         # submissions keep their own --conf (network-bound shuffles
         # usually want compression even more).
         builder = builder.config("spark.io.compression.codec", "zstd")
+        # File listing on the driver: a pruned streaming-state read
+        # passes already-globbed shard dirs to spark.read.parquet,
+        # and above this threshold (default 32) Spark lists them with
+        # a Spark JOB of one task per dir.  A traced 200-row catch-up
+        # (4 cores) ran three such jobs per epoch, growing with the
+        # epochs: 36–64 dirs and 241–522 ms each in its first epoch,
+        # 74–128 dirs and 375–780 ms in its second.  In local mode
+        # those tasks run on the driver's own cores and cost ~4 ms of
+        # scheduling per dir against ~0.7 ms for a driver-side list:
+        # reading 40 epochs × 64 shards (2,449 dirs) took 10.7–13.6 s
+        # via the job vs 1.5–1.9 s on the driver, one shard (40 dirs)
+        # 0.5–0.9 s vs 0.28–0.31 s.  The bound only routes a
+        # pathological 10^5-dir read back to the job.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "100000"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # experiment hook: SPARK_GRAFT_EXTRA_CONF='{"spark.io.compression.

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 _WALK_SCHEMA = (
     "path string, content binary, length long, mod_time_ns long, ok boolean"
 )
@@ -242,11 +244,11 @@ def _walk_read(
         except OSError:
             continue
     if not seeds:
-        return spark.createDataFrame([], _WALK_SCHEMA).select(
+        return local_frame(spark, [], _WALK_SCHEMA).select(
             "path", "content", "length", "mod_time_ns"
         )
-    plist = spark.createDataFrame(
-        pd.DataFrame(sorted(seeds), columns=["path", "is_dir"])
+    plist = local_frame(
+        spark, sorted(seeds), "path string, is_dir boolean"
     ).repartition(min(len(seeds), 64))
     _CHUNK = 256  # rows per yield
     _CHUNK_BYTES = 64 << 20  # ... or 64 MB of content, whichever first

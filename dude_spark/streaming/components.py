@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
+from ..session import local_frame
 from ..storage import ShardedEpochStore
 
 ASSIGN_STORE = "assign"
@@ -250,9 +251,7 @@ def current_assignments(
     df = assign_store.read_for_shards(list(range(assign_store.n_shards)))
     resolved = assign_store.resolve_latest(df)
     if resolved is None:
-        return spark.createDataFrame(
-            [], "image_id string, cluster_id string"
-        )
+        return local_frame(spark, [], "image_id string, cluster_id string")
     # resolve_latest, not a hand-rolled max_by: the latest-wins
     # contract (tie-breaking, extra state columns) must stay single-
     # sourced with the pruned-read path or the two silently diverge

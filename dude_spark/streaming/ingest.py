@@ -75,6 +75,7 @@ from ..detectors.suffix import (
 )
 from ..operators.candidates import pairs_from_buckets, pairs_vs_known
 from ..operators.verify import verify_jaccard
+from ..session import local_frame
 from ..storage import ShardedEpochStore
 
 BucketFn = Callable[[DataFrame], DataFrame]
@@ -160,12 +161,13 @@ def _batch_pairs(
     )
     if overcap_known_rows:
         overcap = overcap.unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (r["bucket"], r["bucket_size"], "known")
                     for r in overcap_known_rows
                 ],
-                schema=overcap.schema,
+                overcap.schema,
             )
         )
     out = vs_new if vs_known is None else vs_new.unionByName(vs_known)

@@ -9,6 +9,8 @@ salted-key helper is equivalent to direct grouping.
 
 from __future__ import annotations
 
+import ast
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -358,3 +360,75 @@ def test_ann_query_joins_broadcast_query_side(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _assert_local_relation(df):
+    """Driver-held rows must plan as a JVM LocalRelation: a LogicalRDD
+    over a Python RDD costs a Python-worker job on every action."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_driver_held_frames_plan_as_local_relation(spark, tmp_path):
+    from dude_spark.operators.candidates import cross_corpus_pairs
+    from dude_spark.operators.components import _driver_components
+    from dude_spark.storage import ShardedEpochStore
+    from dude_spark.streaming.components import current_assignments
+
+    def buckets(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=["image_id", "bucket"])
+        )
+
+    # overcap record from pairs_from_buckets: no hot bucket, one hot bucket
+    _, none_hot = pairs_from_buckets(buckets([("a", "x"), ("b", "x")]), 4)
+    _, one_hot = pairs_from_buckets(
+        buckets([(f"i{i}", "HOT") for i in range(6)]), 4
+    )
+    assert none_hot.count() == 0 and one_hot.count() == 1
+    # cross-corpus: the known side's capped bucket joins the record
+    _, cross = cross_corpus_pairs(
+        buckets([(f"k{i}", "HOT") for i in range(6)]),
+        buckets([("n0", "HOT")]),
+        bucket_cap=4,
+    )
+    assert {r["side"] for r in cross.collect()} == {"known"}
+    no_edges = _driver_components(spark.createDataFrame([], "a long, b long"))
+    empty_state = current_assignments(
+        spark, ShardedEpochStore(spark, str(tmp_path), "assign", "image_id")
+    )
+    assert no_edges.count() == 0 and empty_state.count() == 0
+    for df in (none_hot, one_hot, cross, no_edges, empty_state):
+        _assert_local_relation(df)
+
+
+def _create_dataframe_refs(tree) -> int:
+    return sum(
+        isinstance(n, ast.Attribute) and n.attr == "createDataFrame"
+        for n in ast.walk(tree)
+    )
+
+
+def test_driver_frames_only_built_by_local_frame():
+    """One way to build a frame over driver-held rows: the package's
+    only createDataFrame call is the one inside session.local_frame."""
+    import pathlib
+
+    import dude_spark
+
+    pkg = pathlib.Path(dude_spark.__file__).parent
+    refs = {
+        str(path.relative_to(pkg)): _create_dataframe_refs(
+            ast.parse(path.read_text())
+        )
+        for path in sorted(pkg.rglob("*.py"))
+    }
+    session = ast.parse((pkg / "session.py").read_text())
+    local_frame = next(
+        n
+        for n in ast.walk(session)
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    assert {k: v for k, v in refs.items() if v} == {
+        "session.py": _create_dataframe_refs(local_frame)
+    }

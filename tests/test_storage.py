@@ -325,3 +325,75 @@ def test_atomic_meta_write_leaves_no_torn_final_name(spark, tmp_path):
     with open(path) as f:
         assert f.read() == '{"ok": true}'
     assert [p for p in os.listdir(str(tmp_path)) if ".tmp-" in p] == []
+
+
+def _shard_data_files(gen_dir):
+    """{shard dir name: [data file paths]} under one epoch/base dir."""
+    out = {}
+    for d in sorted(os.listdir(gen_dir)):
+        if d.startswith("shard="):
+            out[d] = [
+                os.path.join(gen_dir, d, f)
+                for f in os.listdir(os.path.join(gen_dir, d))
+                if not f.startswith((".", "_"))
+            ]
+    return out
+
+
+def test_sharded_writes_are_key_sorted_per_file(spark, tmp_path):
+    """Every shard file written by write_epoch and by compact holds
+    its rows in key order — the contract parquet min/max row-group
+    pruning on the key relies on.  Keys arrive permuted across
+    several input partitions, so a write that sorts by shard alone
+    leaves them unsorted."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from dude_spark.storage import ShardedEpochStore
+
+    store = ShardedEpochStore(spark, str(tmp_path), "s", "k", n_shards=8)
+    for e in range(2):
+        keys = spark.range(e * 4000, (e + 1) * 4000, numPartitions=4).select(
+            F.format_string("k%08d", (F.col("id") * 7919) % 8000).alias("k"),
+            F.lit(e).alias("v"),
+        )
+        store.write_epoch(keys, e)
+    store.compact(1)
+
+    base = str(tmp_path / "s")
+    gens = [d for d in os.listdir(base) if d.startswith("epoch=")]
+    assert gens == ["epoch=-1"]
+    _mk_epoch(spark, store, 2, [(f"k{i:08d}", 2) for i in range(999, 0, -7)])
+    checked = 0
+    for gen in ("epoch=-1", "epoch=2"):
+        for files in _shard_data_files(os.path.join(base, gen)).values():
+            for f in files:
+                ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
+                assert ks == sorted(ks), f
+                checked += 1
+    assert checked >= 8
+
+
+def test_write_epoch_spreads_shards_over_tasks(spark, tmp_path):
+    """write_epoch at 64 shards on a multi-slot session: exactly one
+    data file per shard directory, written by more than one task
+    (the part-file's task id) — not one task writing every shard."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from dude_spark.storage import ShardedEpochStore
+
+    assert spark.sparkContext.defaultParallelism > 1
+    store = ShardedEpochStore(spark, str(tmp_path), "s", "k", n_shards=64)
+    store.write_epoch(
+        spark.range(2000).select(F.format_string("k%d", "id").alias("k")), 0
+    )
+    per_shard = _shard_data_files(str(tmp_path / "s" / "epoch=0"))
+    assert len(per_shard) == 64
+    assert all(len(files) == 1 for files in per_shard.values()), per_shard
+    task_ids = {
+        re.match(r"part-(\d+)", os.path.basename(files[0])).group(1)
+        for files in per_shard.values()
+    }
+    assert len(task_ids) > 1, task_ids
